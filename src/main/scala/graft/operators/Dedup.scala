@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -36,7 +37,15 @@ object Dedup {
     * the second-level block split so no single task owns an O(bucket²) pair
     * emission (an adversarial corpus can put 10⁵ DISTINCT-yet-banded
     * signatures in one bucket — LSH bounds bucket sizes only in
-    * expectation). */
+    * expectation).
+    *
+    * Size trade for [[chunkPairWalk]]: the unit join's wire cost is
+    * Σ_bucket nc²·chunk_bytes ∝ bucket²·item_bytes / chunk (bigger cuts
+    * wire), but a chunk row allocates items·item_bytes CONTIGUOUSLY —
+    * multi-MB chunk rows are G1 humongous allocations and 32 concurrent
+    * tasks fragment the heap to an OOM (measured at sf1 with 4096-item
+    * string-array chunks); 1024 hash-array items (~0.4 MB) stay well
+    * under the humongous threshold at default region sizes. */
   private[operators] val DefaultChunk = 1024
 
   /** All intra-bucket item pairs (`a` < `b` by the item struct's order) for
@@ -104,6 +113,76 @@ object Dedup {
           slice(col("ba"), col("i") + lit(2), size(col("ba"))))
           .otherwise(col("bb"))).as("b"))
   }
+
+  /** The chunk-unit plan behind the exact set-similarity joins: one `r`
+    * struct (doc_a, doc_b, n) per pair `test` accepts, doc_a < doc_b.
+    * `rows` carry the bucket column `key`, `doc_id` and the fields of
+    * `item` (doc_id leading — the sort order the walk relies on).
+    *
+    * Each bucket splits into doc-id-ordered chunks of ≤ `chunk` items
+    * (bounded row size — collecting whole mega-buckets as single rows
+    * OOMs). The chunk relation is LazyCheckpoint-ed: it feeds the
+    * diagonal walk, the unit enumeration, and both attach legs, and
+    * without the lineage cut the upstream join or exchange, the bucket
+    * window and the collect_list shuffle would re-execute per consumer.
+    *
+    * Units split by DIAGONALITY. A diagonal unit IS its chunk row: it is
+    * walked straight off the checkpointed relation — zero joins, zero
+    * exchanges (at sf0.1 every bucket fits one chunk, and the flat-unit
+    * attach machinery cost ~55% of dd_prefix_pairs). Off-diagonal
+    * (ci < cj) units are enumerated FLAT with no arrays carried — empty
+    * whenever every bucket fits one chunk, and AQE's empty-relation
+    * propagation then prunes the attach joins — and attach their two
+    * chunk arrays by equi-join. The unit redistribution is FUSED into the
+    * bb-leg join: repartition by (key, cj) at the pinned `width` is the
+    * exact partitioning that join requires, and the explicit count keeps
+    * AQE from coalescing units whose shuffle bytes are O(chunk) but whose
+    * walk is O(chunk²) (the [[bucketPairs]] rule). */
+  private def chunkPairWalk(rows: DataFrame, key: String, item: Column,
+      test: graft.expressions.ChunkPairWalk.PairTest, chunk: Int,
+      width: Int): DataFrame = {
+    require(chunk > 1, "chunk must exceed 1")
+    val wB = Window.partitionBy(key).orderBy("doc_id")
+    val chunks = graft.plans.LazyCheckpoint.of(
+      rows.withColumn("ci", ((row_number().over(wB) - 1) / chunk).cast("int"))
+        .groupBy(key, "ci")
+        .agg(sort_array(collect_list(item)).as("items")))
+    def walk(unitFrame: DataFrame, ba: Column, bb: Column,
+        diagonal: Boolean): DataFrame = {
+      import org.apache.spark.sql.GraftBridge.expression
+      unitFrame.select(explode(org.apache.spark.sql.GraftBridge.column(
+        graft.expressions.ChunkPairWalk(expression(ba), expression(bb),
+          expression(lit(diagonal)), expression(col(key)), test))).as("r"))
+    }
+    val diag = walk(chunks, col("items"), col("items"), diagonal = true)
+    val offUnits = chunks.groupBy(key)
+      .agg(max(col("ci")).as("mx"))
+      .filter(col("mx") > 0)
+      .select(col(key), col("mx"),
+        explode(sequence(lit(0), col("mx") - 1)).as("ci"))
+      .select(col(key), col("ci"),
+        explode(sequence(col("ci") + 1, col("mx"))).as("cj"))
+    val off = walk(
+      offUnits
+        .join(chunks.select(col(key), col("ci"), col("items").as("ba")),
+          Seq(key, "ci"))
+        .repartition(width, col(key), col("cj"))
+        .join(chunks.select(col(key), col("ci").as("cj"),
+          col("items").as("bb")), Seq(key, "cj")),
+      col("ba"), col("bb"), diagonal = false)
+    diag.unionByName(off)
+  }
+
+  /** Pair joins emit long doc ids: integral id columns widen to long, and
+    * any other id type fails here, naming the operator, instead of deep in
+    * the walk's analysis. */
+  private def longId(op: String, docs: DataFrame, idCol: Column): Column =
+    docs.select(idCol).schema.head.dataType match {
+      case LongType => idCol
+      case ByteType | ShortType | IntegerType => idCol.cast(LongType)
+      case other => throw new IllegalArgumentException(
+        s"$op: doc id must be an integral type, got ${other.simpleString}")
+    }
 
   /** Exact dedup: one row per key group with the kept (minimum) id and the
     * duplicate count. Equivalent to `dropDuplicates` but keeps lineage of
@@ -445,34 +524,39 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact prefix-filter Jaccard join, FUSED screen + exact confirm
-    * (round-14 sf1 rehearsal finding): the candidates-then-attach
-    * pipeline shuffled the full shingle arrays once per CANDIDATE PAIR —
-    * at the sf1 fixture (t = 0.5, entropy-bounded vocab) the prefix
-    * filter admits 447M candidates (36% of all pairs), so the doc_b
-    * attach join moved ~450 GB of array payload and the operator took
-    * ~400 s. Here the quadratic mass NEVER crosses the wire and never
-    * materializes as rows: prefix rows join their doc's sorted 64-bit
-    * shingle-HASH array once (corpus-linear), each shingle bucket is
-    * split into doc-id-ordered chunks of ≤[[DefaultChunk]] items
-    * (bounded row size — collecting whole mega-buckets as single rows
-    * OOMs), the (ci ≤ cj) chunk-index pairs are enumerated FLAT, each
-    * unit attaches its two chunk arrays by equi-join and is explicitly
-    * redistributed (a unit's shuffle bytes are O(chunk) but its emission
-    * is O(chunk²) — AQE must not coalesce them), and the length band,
-    * positional filter, and threshold-Jaccard test all run inside ONE
-    * [[graft.expressions.ChunkPairJaccard]] loop over primitive longs.
-    * The hash screen is LOSSLESS (hashing can only merge distinct
-    * shingles, so hash-Jaccard ≥ true Jaccard); the output-sized
-    * survivor set is then exact-confirmed by the string merge walk.
-    * CPU stays inherently quadratic in bucket occupancy — exact recall
-    * enumerates every shared-prefix pair; the probabilistic 100 TB path
-    * is [[lshCandidatePairs]]. Results identical to the unfused form:
-    * same pairs, same jaccard, one row per qualifying pair. */
+  /** Exact prefix-filter Jaccard join, FUSED screen + exact confirm.
+    * A candidates-then-attach pipeline shuffles the full shingle arrays
+    * once per CANDIDATE PAIR — at the sf1 fixture (t = 0.5,
+    * entropy-bounded vocab) the prefix filter admits 447M candidates (36%
+    * of all pairs), so the doc_b attach join moved ~450 GB of array
+    * payload and the operator took ~400 s. Here the quadratic mass NEVER
+    * crosses the wire and never materializes as rows: prefix rows join
+    * their doc's sorted 64-bit shingle-HASH array once (corpus-linear),
+    * and [[chunkPairWalk]] runs the length band, positional filter, and
+    * threshold-Jaccard screen inside one
+    * [[graft.expressions.ChunkPairWalk]] loop per chunk unit. The hash
+    * screen is LOSSLESS (hashing can only merge distinct shingles, so
+    * hash-Jaccard ≥ true Jaccard); the output-sized survivor set is then
+    * exact-confirmed by the string merge walk. CPU stays inherently
+    * quadratic in bucket occupancy — exact recall enumerates every
+    * shared-prefix pair; the probabilistic 100 TB path is
+    * [[lshCandidatePairs]]. Results identical to the unfused form: same
+    * pairs, same jaccard, one row per qualifying pair. Integral ids widen
+    * to long; any other id type is rejected. */
   def prefixFilterPairs(docs: DataFrame, idCol: Column, textCol: Column,
       threshold: Double, shingleK: Int = 2,
       guardFraction: Double = DefaultGuardFraction,
-      autoRouteToLsh: Boolean = false): DataFrame = {
+      autoRouteToLsh: Boolean = false): DataFrame =
+    prefixFilterPairsChunked(docs, longId("prefixFilterPairs", docs, idCol),
+      textCol, threshold, shingleK, guardFraction, autoRouteToLsh,
+      DefaultChunk)
+
+  /** [[prefixFilterPairs]] with the chunk size exposed so specs can force
+    * multi-chunk (off-diagonal) buckets at fixture scale. */
+  private[operators] def prefixFilterPairsChunked(docs: DataFrame,
+      idCol: Column, textCol: Column, threshold: Double, shingleK: Int,
+      guardFraction: Double, autoRouteToLsh: Boolean,
+      chunk: Int): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val sets = prefixShingleSets(docs, idCol, textCol, shingleK)
@@ -489,8 +573,8 @@ object Dedup {
           (size(col("sh_a")) + size(col("sh_b")) - col("i")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    // applicability pre-flight (round-15 directive: the 36%-candidate
-    // regime the sf1 rehearsal measured was documented but not DETECTED).
+    // applicability pre-flight: the 36%-candidate regime the sf1 fixture
+    // reaches must be DETECTED, not only documented.
     // One count-agg over the already-checkpointed prefix relation — cost
     // is corpus-linear and trivially small next to the refine it guards.
     // The estimate is MEMOIZED per (session, corpus plan, k, t): the
@@ -524,95 +608,19 @@ object Dedup {
             " Consider lshCandidatePairs, or pass autoRouteToLsh=true.")
       }
     }
-    // chunk size trade: the unit join's wire cost is Σ_bucket
-    // nc²·chunk_bytes ∝ bucket²·item_bytes / chunk (bigger cuts wire),
-    // but a chunk row allocates items·item_bytes CONTIGUOUSLY — multi-MB
-    // chunk rows are G1 humongous allocations and 32 concurrent tasks
-    // fragment the heap to an OOM (measured at sf1 with 4096-item
-    // string-array chunks); 1024 hash-array items (~0.4 MB) stay well
-    // under the humongous threshold at default region sizes
-    val chunk = DefaultChunk
     // prefix rows + their doc's SORTED 64-bit shingle-hash array (one
     // id-keyed join — the only array attach before the confirm step,
     // corpus-linear; hashes, not strings: the screen walks primitive
-    // longs and the wire carries ~8 bytes per shingle), then
-    // doc-id-ordered chunk index within each bucket: chunk rows stay
-    // ≤ chunk items
+    // longs and the wire carries ~8 bytes per shingle)
     val setsH = sets.select(col("doc_id"),
       sort_array(transform(col("sh"), x => xxhash64(x))).as("shh"))
-    val wB = Window.partitionBy("shingle").orderBy("doc_id")
-    // LazyCheckpoint-ed (round-15 ADVICE): `chunks` feeds THREE consumers
-    // below (the unit enumeration and both chunk-array attach legs), so
-    // without the lineage cut the prefix⋈setsH join, the per-bucket
-    // window, and the collect_list shuffle of the full hash arrays would
-    // re-execute once per consumer — the "one-time corpus-linear array
-    // attach" would run three times
-    val chunks = graft.plans.LazyCheckpoint.of(
-      prefix.join(setsH, "doc_id")
-        .withColumn("ci",
-          ((row_number().over(wB) - 1) / chunk).cast("int"))
-        .groupBy("shingle", "ci")
-        .agg(sort_array(collect_list(
-          struct(col("doc_id"), col("n"), col("rn"), col("shh"))))
-          .as("items")))
-    // one [[graft.expressions.ChunkPairJaccard]] evaluation per unit: the
-    // band, positional, and hash-walk screen run pair-by-pair inside the
-    // expression's loop — a GENERATOR-based expansion would copy the
-    // partner chunk's array into every emitted row (measured
-    // allocation-rate OOM at sf1); here only screen survivors
-    // (output-sized) materialize.
-    //
-    // Round 15 split the unit set by DIAGONALITY after reading the
-    // executed-plan metrics: at sf0.1 every bucket fits one chunk, so ALL
-    // units were diagonal — yet each paid the flat-unit attach machinery
-    // (two chunk-array joins + the unit repartition: 300 MB of exchange
-    // for 37 MB of chunk data, ~55% of the query). A diagonal unit IS its
-    // chunk row: evaluate the expression straight off the checkpointed
-    // chunk relation — zero joins, zero exchanges, width and distribution
-    // fixed by the checkpoint's own (shingle, ci) groupBy (32-partition
-    // static plan: LazyCheckpoint plans AQE-off, so nothing coalesces the
-    // O(chunk²)-emission rows). Off-diagonal units (multi-chunk buckets —
-    // the sf1 regime) keep the attach joins, with the explicit unit
-    // redistribution FUSED into the bb-leg join: repartition by
-    // (shingle, cj) is the exact partitioning that join requires, so the
-    // pinned exchange both distributes units and feeds the SMJ
-    // (REPARTITION_BY_NUM — the bucketPairs rule; one fewer array-bearing
-    // exchange than redistributing after the attach).
-    def screen(unitFrame: DataFrame, ba: Column, bb: Column,
-        diagonal: Boolean): DataFrame =
-      unitFrame.select(explode(org.apache.spark.sql.GraftBridge.column(
-        graft.expressions.ChunkPairJaccard(
-          org.apache.spark.sql.GraftBridge.expression(ba),
-          org.apache.spark.sql.GraftBridge.expression(bb),
-          org.apache.spark.sql.GraftBridge.expression(lit(diagonal)),
-          threshold))).as("r"))
-    val diag = screen(chunks, col("items"), col("items"), diagonal = true)
-    // flat (shingle, ci < cj) unit enumeration — no arrays carried; empty
-    // whenever every bucket fits one chunk (AQE's empty-relation
-    // propagation then prunes the attach joins outright)
-    val offUnits = chunks.groupBy("shingle")
-      .agg(max(col("ci")).as("mx"))
-      .filter(col("mx") > 0)
-      .select(col("shingle"), col("mx"),
-        explode(sequence(lit(0), col("mx") - 1)).as("ci"))
-      .select(col("shingle"), col("ci"),
-        explode(sequence(col("ci") + 1, col("mx"))).as("cj"))
-    val off = screen(
-      offUnits
-        .join(chunks.select(col("shingle"), col("ci"), col("items").as("ba")),
-          Seq("shingle", "ci"))
-        // size-derived pin width (round 16): the unit rows carry O(chunk)
-        // hash arrays bounded by the corpus's shingle-set bytes — width
-        // follows the scan-linear `sets` stats (core-count floor
-        // locally); `chunks` itself sits downstream of a join whose
-        // planner size estimate is a junk-high product (measured 44.8 GB
-        // for 37 MB of chunk data at sf0.1), so it must not drive width
-        .repartition(Parallelism.pinWidth(sets),
-          col("shingle"), col("cj"))
-        .join(chunks.select(col("shingle"), col("ci").as("cj"),
-          col("items").as("bb")), Seq("shingle", "cj")),
-      col("ba"), col("bb"), diagonal = false)
-    val survivors = diag.unionByName(off)
+    // width follows the scan-linear `sets` stats: the chunk rows sit
+    // downstream of a join whose planner size estimate is a junk-high
+    // product (measured 44.8 GB for 37 MB of chunk data at sf0.1)
+    val survivors = chunkPairWalk(prefix.join(setsH, "doc_id"), "shingle",
+        struct(col("doc_id"), col("n"), col("rn"), col("shh")),
+        graft.expressions.ChunkPairWalk.PrefixJaccard(threshold), chunk,
+        Parallelism.pinWidth(sets))
       .select(col("r.doc_a").as("doc_a"), col("r.doc_b").as("doc_b"))
       .distinct()
     // exact CONFIRM on the (output-sized) screen survivors: the string
@@ -1098,37 +1106,33 @@ object Dedup {
     * away). `minShared` > 1 screens single-fingerprint coincidences of
     * the 16-bit hash space.
     *
-    * Scale shape (round 16 — the [[prefixFilterPairs]] chunk-unit pattern
-    * applied to the family's steepest entry): the corpus reduces
-    * row-locally to its sorted-distinct fingerprint ARRAY (zero exchanges
-    * in the derivation — [[graft.expressions.WinnowFingerprints]] emits
-    * the distinct set per row), each (fp, doc) occurrence carries its
-    * doc's array through ONE fingerprint-keyed exchange into
-    * doc-id-ordered chunks of ≤ [[DefaultChunk]] items, and the shared
-    * count is a merge walk INSIDE [[graft.expressions.ChunkPairOverlap]]
-    * — each qualifying pair emitted exactly once, from the bucket holding
-    * its MINIMUM shared fingerprint, already carrying its exact n_shared.
-    * The old formulation materialized one row per co-occurrence
-    * (Σ_bucket C(occupancy, 2) — 10⁷-scale at the sf1 fixture whose
-    * 30-word vocabulary makes every fingerprint hot) and shuffled that
-    * quadratic mass into a pair-keyed count aggregate with one hash-table
-    * group per candidate pair; here the quadratic mass is loop iterations
+    * Scale shape: the corpus reduces row-locally to its sorted-distinct
+    * fingerprint ARRAY (zero exchanges in the derivation —
+    * [[graft.expressions.WinnowFingerprints]] emits the distinct set per
+    * row), each (fp, doc) occurrence carries its doc's array through ONE
+    * fingerprint-keyed exchange into [[chunkPairWalk]]'s chunks, and the
+    * shared count is a merge walk inside
+    * [[graft.expressions.ChunkPairWalk]] — each qualifying pair emitted
+    * exactly once, from the bucket holding its MINIMUM shared
+    * fingerprint, already carrying its exact n_shared. A pair-count
+    * formulation materializes one row per co-occurrence (Σ_bucket
+    * C(occupancy, 2) — 10⁷-scale at the sf1 fixture whose 30-word
+    * vocabulary makes every fingerprint hot) and shuffles that quadratic
+    * mass into a pair-keyed count aggregate; here it is loop iterations
     * over primitive longs and only output-sized rows materialize. No
-    * all-pairs step, no O(bucket²) task (chunk units spread a hot
-    * fingerprint's expansion cluster-wide), no pair-keyed shuffle at
-    * all. */
+    * all-pairs step, no O(bucket²) task, no pair-keyed shuffle at all.
+    * Integral ids widen to long; any other id type is rejected. */
   def winnowCandidatePairs(docs: DataFrame, idCol: Column, textCol: Column,
       minShared: Int = 2, gramK: Int = 3, window: Int = 4): DataFrame =
-    winnowCandidatePairsChunked(docs, idCol, textCol, minShared, gramK,
-      window, DefaultChunk)
+    winnowCandidatePairsChunked(docs,
+      longId("winnowCandidatePairs", docs, idCol), textCol, minShared,
+      gramK, window, DefaultChunk)
 
   /** [[winnowCandidatePairs]] with the chunk size exposed so specs can
     * force multi-chunk (off-diagonal) buckets at fixture scale. */
   private[operators] def winnowCandidatePairsChunked(docs: DataFrame,
       idCol: Column, textCol: Column, minShared: Int, gramK: Int,
       window: Int, chunk: Int): DataFrame = {
-    require(minShared >= 1)
-    require(chunk > 1, "chunk must exceed 1")
     // (doc_id, sorted distinct fingerprint array) — row-local; docs with
     // no fingerprints drop (they cannot pair with anything)
     val fpsets = Parallelism.fanOut(
@@ -1144,58 +1148,18 @@ object Dedup {
     // "small rows" being the arrays the decision genuinely needs)
     val ex = fpsets.select(col("doc_id"), col("fps"),
       explode(col("fps")).as("fp"))
-    val wB = Window.partitionBy("fp").orderBy("doc_id")
-    // doc-id-ordered chunk index within each bucket (chunk rows stay
-    // ≤ chunk items — a hot boilerplate fingerprint's bucket splits into
-    // units instead of one task owning its O(bucket²) walk); the pinned
-    // repartition IS the window/groupBy exchange (HashPartitioning(fp)
-    // satisfies both), kept explicit so AQE's byte-coalescing cannot
-    // fold the CPU-per-row walk to one partition (the bucketPairs rule).
-    // LazyCheckpoint: `chunks` feeds the diagonal walk, the unit
-    // enumeration, and both off-diagonal attach legs — without the
-    // lineage cut the fingerprint scan and the bucket window would
-    // re-execute once per consumer (the prefixFilterPairs rationale).
-    // size-derived pin width (round 16): core-count floor locally, grows
-    // with the array-bearing exploded rows' planned bytes at scale
+    // the pinned repartition IS the bucket window/groupBy exchange
+    // (HashPartitioning(fp) satisfies both), kept explicit so AQE's
+    // byte-coalescing cannot fold the CPU-per-row walk to one partition
+    // (the bucketPairs rule); size-derived width: core-count floor
+    // locally, grows with the array-bearing rows' planned bytes at scale
     val width = Parallelism.pinWidth(ex)
-    val chunks = graft.plans.LazyCheckpoint.of(
-      ex.repartition(width, col("fp"))
-        .withColumn("ci",
-          ((row_number().over(wB) - 1) / chunk).cast("int"))
-        .groupBy("fp", "ci")
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("fps"))))
-          .as("items")))
-    def walk(unitFrame: DataFrame, ba: Column, bb: Column,
-        diagonal: Boolean): DataFrame =
-      unitFrame.select(explode(org.apache.spark.sql.GraftBridge.column(
-        graft.expressions.ChunkPairOverlap(
-          org.apache.spark.sql.GraftBridge.expression(ba),
-          org.apache.spark.sql.GraftBridge.expression(bb),
-          org.apache.spark.sql.GraftBridge.expression(lit(diagonal)),
-          org.apache.spark.sql.GraftBridge.expression(col("fp")),
-          minShared))).as("r"))
-    val diag = walk(chunks, col("items"), col("items"), diagonal = true)
-    // flat (fp, ci < cj) unit enumeration — no arrays carried; empty
-    // whenever every bucket fits one chunk (AQE's empty-relation
-    // propagation then prunes the attach joins outright)
-    val offUnits = chunks.groupBy("fp")
-      .agg(max(col("ci")).as("mx"))
-      .filter(col("mx") > 0)
-      .select(col("fp"), col("mx"),
-        explode(sequence(lit(0), col("mx") - 1)).as("ci"))
-      .select(col("fp"), col("ci"),
-        explode(sequence(col("ci") + 1, col("mx"))).as("cj"))
-    val off = walk(
-      offUnits
-        .join(chunks.select(col("fp"), col("ci"), col("items").as("ba")),
-          Seq("fp", "ci"))
-        .repartition(width, col("fp"), col("cj"))
-        .join(chunks.select(col("fp"), col("ci").as("cj"),
-          col("items").as("bb")), Seq("fp", "cj")),
-      col("ba"), col("bb"), diagonal = false)
-    diag.unionByName(off)
+    chunkPairWalk(ex.repartition(width, col("fp")), "fp",
+        struct(col("doc_id"), col("fps")),
+        graft.expressions.ChunkPairWalk.MinFingerprintOverlap(minShared),
+        chunk, width)
       .select(col("r.doc_a").as("doc_a"), col("r.doc_b").as("doc_b"),
-        col("r.n_shared").as("n_shared"))
+        col("r.n").as("n_shared"))
   }
 
   /** The keep decision over [[winnowCandidatePairs]]: drop every doc that

@@ -12,6 +12,34 @@ import org.apache.spark.sql.DataFrame
   */
 object Parallelism {
 
+  /** Size-derived width for explicitly PINNED exchanges: the
+    * REPARTITION_BY_NUM pins that protect CPU-per-row stages from AQE's
+    * byte-coalescing would under-partition a data-sized exchange at
+    * cluster scale if they were core-count-wide — a core-count-wide
+    * exchange of raw corpus rows means multi-GB partitions and spill, the
+    * very thing AQE's byte logic would have split. Width =
+    * max(defaultParallelism, plannedBytes / bytesPerTask): the core-count
+    * FLOOR keeps tiny inputs at full machine width (unchanged at bench
+    * scale), the bytes term grows the width once partitions would
+    * otherwise exceed the target.
+    *
+    * Planned bytes come from the optimized logical plan's statistics —
+    * driver-side arithmetic, no jobs at construction (the fanOut
+    * discipline). Stats are estimates: UNKNOWN sizes (the Long.MaxValue
+    * default of stat-less leaves) fall back to the core-count floor, and
+    * a 64×-cores cap bounds join-estimate blowup — both fallbacks
+    * reproduce or bound a core-count pin, never a 1-partition fold. */
+  def pinWidth(df: DataFrame, bytesPerTask: Long = 64L << 20): Int = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val size =
+      try df.queryExecution.optimizedPlan.stats.sizeInBytes
+      catch { case _: Throwable => BigInt(-1) }
+    val unknown = size <= 0 || size >= BigInt(Long.MaxValue) / 4
+    if (unknown) cores
+    else ((size + bytesPerTask - 1) / bytesPerTask)
+      .max(BigInt(cores)).min(BigInt(cores) * 64).toInt
+  }
+
   /** Repartition `df` to shuffle width — ONLY when its scan is actually
     * narrower. A 100 TB corpus scan already carries thousands of splits;
     * shuffling its full rows (for MinHash, the document TEXT) before a
@@ -27,41 +55,6 @@ object Parallelism {
     * time (a silent double-execution trap). For a scan-shaped plan there
     * are no exchanges to materialize, so the `.rdd` width probe is pure
     * file-split math — no jobs at any time. */
-  /** Size-derived width for explicitly PINNED exchanges (round-16
-    * directive #3): the REPARTITION_BY_NUM pins that protect CPU-per-row
-    * stages from AQE's byte-coalescing were core-count-wide, which
-    * under-partitions a data-sized exchange at cluster scale — a
-    * core-count-wide exchange of raw corpus rows means multi-GB
-    * partitions and spill, the very thing AQE's byte logic would have
-    * split. Width = max(defaultParallelism, plannedBytes / bytesPerTask):
-    * the core-count FLOOR keeps tiny inputs at full machine width (the
-    * round-15 pin behavior, unchanged at bench scale), the bytes term
-    * grows the width once partitions would otherwise exceed the target.
-    *
-    * Planned bytes come from the optimized logical plan's statistics —
-    * driver-side arithmetic, no jobs at construction (the fanOut
-    * discipline). Stats are estimates: UNKNOWN sizes (the Long.MaxValue
-    * default of stat-less leaves) fall back to the core-count floor, and
-    * a 64×-cores cap bounds join-estimate blowup — both fallbacks
-    * reproduce or bound the pre-round-16 behavior, never a 1-partition
-    * fold. */
-  def pinWidth(df: DataFrame, bytesPerTask: Long = 64L << 20): Int = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val size =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(-1) }
-    val unknown = size <= 0 || size >= BigInt(Long.MaxValue) / 4
-    val w =
-      if (unknown) cores
-      else ((size + bytesPerTask - 1) / bytesPerTask)
-        .max(BigInt(cores)).min(BigInt(cores) * 64).toInt
-    if (sys.env.contains("SPARK_GRAFT_WIDTH_DEBUG"))
-      // scalastyle:off println
-      println(s"[pinWidth] size=$size cores=$cores width=$w")
-      // scalastyle:on println
-    w
-  }
-
   def fanOut(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
     def scanShaped(p: LogicalPlan): Boolean = p match {

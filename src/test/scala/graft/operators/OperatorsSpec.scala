@@ -96,12 +96,58 @@ class OperatorsSpec extends SparkSpec {
       (3L, "p q r s t u v w"),
       (4L, "p q r s t u v w"), // exact dup of 3
       (5L, "a b p q somewhat mixed tokens here"),
-      (6L, "one more unrelated document entirely")
+      (6L, "one more unrelated document entirely"),
+      (7L, "a b c d e f g y") // third near-dup: 3-doc prefix buckets
     ).toDF("doc_id", "text")
-    for (t <- Seq(0.25, 0.5, 0.8, 1.0)) {
+    // chunk = 2 splits every 3+-doc prefix bucket, forcing the off-diagonal
+    // unit path the judged fixtures never reach (every bucket there fits
+    // one DefaultChunk)
+    val sets = Dedup.prefixShingleSets(docs, col("doc_id"), col("text"), 2)
+    assert(Dedup.prefixTokens(sets, 0.25).groupBy("shingle").count()
+      .agg(max(col("count"))).head().getLong(0) > 2,
+      "no multi-chunk bucket at chunk = 2 — the off-diagonal case is vacuous")
+    for (t <- Seq(0.25, 0.5, 0.8, 1.0); chunk <- Seq(2, Dedup.DefaultChunk)) {
       val exact = rowSet(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), t))
-      val pf = rowSet(Dedup.prefixFilterPairs(docs, col("doc_id"), col("text"), t))
-      assert(pf == exact, s"threshold $t: prefix-filter $pf vs exact $exact")
+      val pf = rowSet(Dedup.prefixFilterPairsChunked(docs, col("doc_id"),
+        col("text"), t, 2, Dedup.DefaultGuardFraction, false, chunk))
+      assert(pf == exact, s"threshold $t chunk $chunk: prefix-filter $pf vs exact $exact")
+    }
+  }
+
+  test("pair joins widen integral doc ids to long and reject other id types") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    val docs = Seq(
+      (1L, "a b c d e f g h"),
+      (2L, "a b c d e f g x"),
+      (3L, "p q r s t u v w"),
+      (4L, "p q r s t u v w")
+    ).toDF("doc_id", "text")
+    val ops = Seq[(String, DataFrame => DataFrame)](
+      ("prefixFilterPairs",
+        d => Dedup.prefixFilterPairs(d, col("doc_id"), col("text"), 0.5)),
+      ("winnowCandidatePairs",
+        d => Dedup.winnowCandidatePairs(d, col("doc_id"), col("text"), 1)))
+    // (id type, widens to the long-id pair set?)
+    val idTypes = Seq[(DataType, Boolean)](
+      (IntegerType, true), (ShortType, true), (LongType, true),
+      (StringType, false), (DoubleType, false))
+    for ((name, op) <- ops) {
+      val want = rowSet(op(docs))
+      assert(want.nonEmpty, s"$name: the fixture has no pairs")
+      for ((t, widens) <- idTypes) {
+        val typed = docs.withColumn("doc_id", col("doc_id").cast(t))
+        if (widens) {
+          val got = op(typed)
+          assert(got.schema("doc_a").dataType == LongType &&
+            got.schema("doc_b").dataType == LongType, s"$name/$t: id type")
+          assert(rowSet(got) == want, s"$name/$t: pair set")
+        } else {
+          val e = intercept[IllegalArgumentException](op(typed))
+          assert(e.getMessage.contains(name) &&
+            e.getMessage.contains(t.simpleString), s"$name/$t: ${e.getMessage}")
+        }
+      }
     }
   }
 
