@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * line per physical node with its post-execution SQLMetrics (output
   * rows, shuffle records/bytes, partition counts). This is the
   * measurement tool behind SCALING.md's per-operator decompositions —
-  * e.g. the w1_window_rank story (round-15 directive #4): whether the
+  * e.g. the w1_window_rank story: whether the
   * partial WindowGroupLimit keeps per-task work flat and only
   * row/partition COUNT grows across a decade is a read of these numbers
   * at two SFs, not an argument.
@@ -35,24 +35,30 @@ object PlanMetrics {
     // off its final adaptive plan
     df.queryExecution.toRdd.foreach(_ => ())
 
-    def show(p: SparkPlan, depth: Int): Unit = {
-      val metrics = p.metrics.toSeq
-        .filter { case (_, m) => m.value > 0 }
-        .sortBy(_._1)
-        .map { case (k, m) => s"$k=${m.value}" }
-      val parts =
-        try s" partitions=${p.outputPartitioning.numPartitions}"
-        catch { case _: Throwable => "" }
-      println("  " * depth + p.nodeName + parts +
-        (if (metrics.isEmpty) "" else metrics.mkString(" [", ", ", "]")))
-      p match {
-        case a: AdaptiveSparkPlanExec => show(a.executedPlan, depth + 1)
-        case s: QueryStageExec => show(s.plan, depth + 1)
-        case _ => p.children.foreach(show(_, depth + 1))
-      }
-    }
     println(s"== $name @ $dir")
-    show(df.queryExecution.executedPlan, 0)
+    show(df.queryExecution.executedPlan)
     spark.stop()
+  }
+
+  /** Prints `p` as an indented tree, one line per node with its non-zero
+    * SQLMetrics, descending through adaptive plans and query stages so an
+    * executed AQE plan shows its final stages. `partitions` adds each
+    * node's output partition count. */
+  def show(p: SparkPlan, depth: Int = 0, partitions: Boolean = true): Unit = {
+    val metrics = p.metrics.toSeq
+      .filter { case (_, m) => m.value > 0 }
+      .sortBy(_._1)
+      .map { case (k, m) => s"$k=${m.value}" }
+    val parts =
+      if (!partitions) ""
+      else try s" partitions=${p.outputPartitioning.numPartitions}"
+      catch { case _: Throwable => "" }
+    println("  " * depth + p.nodeName + parts +
+      (if (metrics.isEmpty) "" else metrics.mkString(" [", ", ", "]")))
+    p match {
+      case a: AdaptiveSparkPlanExec => show(a.executedPlan, depth + 1, partitions)
+      case s: QueryStageExec => show(s.plan, depth + 1, partitions)
+      case _ => p.children.foreach(show(_, depth + 1, partitions))
+    }
   }
 }

@@ -184,10 +184,8 @@ object Scratch {
       }
       prof("sig_nofan") {
         noop(docs.select(col("doc_id"),
-          org.apache.spark.sql.GraftBridge.column(
-            graft.expressions.MinHashSignature(
-              org.apache.spark.sql.GraftBridge.expression(col("text")),
-              2, 16)).as("sig")).filter(col("sig").isNotNull))
+          graft.functions.TextFunctions.minhashSignature(col("text"), 16).as("sig"))
+          .filter(col("sig").isNotNull))
       }
       // construction+planning amortized: build the frame ONCE, noop it
       // repeatedly (execution-only timing)
@@ -274,22 +272,9 @@ object Scratch {
       val full = graft.operators.GraphIndex.searchTopK(spark, dir, queries,
         k = 10, hops = 2, seedK = 8)
       prof("full_prebuilt") { noop(full) }
-      locally { // executed-plan SQLMetrics of the full serve (PlanMetrics idiom)
-        import org.apache.spark.sql.execution.SparkPlan
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      locally { // executed-plan SQLMetrics of the full serve
         full.queryExecution.toRdd.foreach(_ => ())
-        def show(p: SparkPlan, depth: Int): Unit = {
-          val ms = p.metrics.toSeq.filter(_._2.value > 0).sortBy(_._1)
-            .map { case (k, m) => s"$k=${m.value}" }
-          println("  " * depth + p.nodeName +
-            (if (ms.isEmpty) "" else ms.mkString(" [", ", ", "]")))
-          p match {
-            case a: AdaptiveSparkPlanExec => show(a.executedPlan, depth + 1)
-            case s: QueryStageExec => show(s.plan, depth + 1)
-            case _ => p.children.foreach(show(_, depth + 1))
-          }
-        }
-        show(full.queryExecution.executedPlan, 0)
+        PlanMetrics.show(full.queryExecution.executedPlan, partitions = false)
       }
       val h1 = graft.operators.GraphIndex.searchTopK(spark, dir, queries,
         k = 10, hops = 1, seedK = 8)

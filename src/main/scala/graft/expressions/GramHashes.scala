@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * as a ~(6·k)-byte join/aggregate key. tx_boilerplate's profile at
   * sf0.1 (PlanMetrics): the corpus runs that chain TWICE (flag leg +
   * join-back leg) and the gram-keyed exchange moves 16.6 MB. This
-  * expression is one tight loop per row (token bytes extracted once,
-  * one reused gram buffer, zero per-gram objects) and its 8-byte hash
+  * expression is one tight loop per row (XXH64 over each gram's byte
+  * span of the document, in place — [[WordGrams]]) and its 8-byte hash
   * is the shuffle key.
   *
   * FINGERPRINT-EQUALITY CONTRACT (the lshCandidatePairs md5-key /
@@ -36,10 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * stage already accepts. Callers needing exactness re-derive strings
   * for flagged occurrences only (bounded by duplicated-gram mass).
   *
-  * Contract pinned to the lambda form: split on single spaces with
-  * trailing empties kept; fewer than k tokens (and NULL text) → EMPTY
-  * array, never null; start positions are 0-based gram starts in
-  * document order.
+  * Contract pinned to the lambda form: words as in [[WordGrams]]; fewer
+  * than k words (and NULL text) → EMPTY array, never null; start
+  * positions are 0-based gram starts in document order.
   */
 case class GramHashes(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
@@ -53,45 +52,22 @@ case class GramHashes(child: Expression, k: Int)
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gram_hashes expects a string column, got ${child.dataType}")
+    WordGrams.checkText("gram_hashes", child.dataType)
 
   private val empty = new GenericArrayData(Array.empty[Any])
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return empty
-    val words = v.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val n = words.length - k + 1
+    val bytes = v.asInstanceOf[UTF8String].getBytes
+    val starts = WordGrams.starts(bytes)
+    val n = WordGrams.count(starts, k)
     if (n <= 0) return empty
-    // token bytes once per row; grams reuse them k times each
-    val tb = new Array[Array[Byte]](words.length)
-    var t = 0
-    while (t < words.length) {
-      tb(t) = words(t).getBytes("UTF-8")
-      t += 1
-    }
-    var buf = new Array[Byte](64)
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
-      var len = k - 1 // separators
-      var j = 0
-      while (j < k) { len += tb(i + j).length; j += 1 }
-      if (buf.length < len) buf = new Array[Byte](math.max(len, buf.length * 2))
-      var p = 0
-      j = 0
-      while (j < k) {
-        if (j > 0) { buf(p) = ' '; p += 1 }
-        val b = tb(i + j)
-        System.arraycopy(b, 0, buf, p, b.length)
-        p += b.length
-        j += 1
-      }
-      val gh = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      val gh = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + starts(i),
+        WordGrams.length(starts, i, k), 42L)
       out(i) = InternalRow(i, gh)
       i += 1
     }

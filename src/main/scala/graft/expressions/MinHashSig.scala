@@ -1,11 +1,8 @@
 package graft.expressions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,13 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `graft_minhash_sig(shingle, numHashes)` over a doc's exploded shingles
   * returns the array of `numHashes` component minima, hex-encoded —
   * component-for-component identical to [[MinHashSignature]] (and to the
-  * DuckDB oracle), for callers that already hold shingle rows.
-  *
-  * Hash family (shared with [[MinHashSignature]] — see its scaladoc for the
-  * collision-probability argument): component `i` is the 8-hex-char chunk
-  * `i % 4` of md5 stream `i / 4` (stream 0 = `md5(shingle)`, stream t =
-  * `md5("t:" || shingle)`), so 4 components share one digest and a 16-hash
-  * signature costs 4 md5 calls per shingle, not 16.
+  * DuckDB oracle), for callers that already hold shingle rows. The hash
+  * family, the fold and the hex encoding live in the `MinHashSignature`
+  * companion.
   *
   * Scale: the buffer is numHashes × 4 bytes per group; partial aggregation
   * collapses shingles map-side, so only one small signature row per doc
@@ -36,16 +29,7 @@ case class MinHashSig(
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  // one digest per JVM thread: aggregate instances can be shared across
-  // concurrently-running local tasks
-  @transient private lazy val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  private val numStreams: Int = (numHashes + 3) / 4
-
-  private val streamPrefixes: Array[Array[Byte]] =
-    (0 until numStreams).map(t =>
-      if (t == 0) Array.emptyByteArray else s"$t:".getBytes("UTF-8")).toArray
+  private val prefixes = MinHashSignature.streamPrefixes(numHashes)
 
   // buffer slot numHashes is a seen-any-shingle flag (0 / 1): all-0xff
   // minima alone cannot distinguish "no input" from a pathological corpus
@@ -60,24 +44,7 @@ case class MinHashSig(
     if (v != null) {
       buf(numHashes) = 1
       val shingle = v.asInstanceOf[UTF8String].getBytes
-      val md = digests.get()
-      var t = 0
-      while (t < numStreams) {
-        md.reset()
-        if (streamPrefixes(t).length > 0) md.update(streamPrefixes(t))
-        md.update(shingle)
-        val h = md.digest()
-        var c = 0
-        val lim = math.min(4, numHashes - t * 4)
-        while (c < lim) {
-          val x = ((h(4 * c) & 0xff) << 24) | ((h(4 * c + 1) & 0xff) << 16) |
-            ((h(4 * c + 2) & 0xff) << 8) | (h(4 * c + 3) & 0xff)
-          val i = t * 4 + c
-          if (java.lang.Integer.compareUnsigned(x, buf(i)) < 0) buf(i) = x
-          c += 1
-        }
-        t += 1
-      }
+      MinHashSignature.fold(prefixes, shingle, 0, shingle.length, buf, numHashes)
     }
     buf
   }
@@ -93,24 +60,7 @@ case class MinHashSig(
   }
 
   override def eval(buf: Array[Int]): Any =
-    if (buf(numHashes) == 0) null
-    else {
-      val hex = "0123456789abcdef"
-      val arr = new Array[Any](numHashes)
-      var j = 0
-      while (j < numHashes) {
-        val v = buf(j)
-        val out = new Array[Byte](8)
-        var i = 0
-        while (i < 8) {
-          out(i) = hex.charAt((v >>> (28 - 4 * i)) & 0xf).toByte
-          i += 1
-        }
-        arr(j) = UTF8String.fromBytes(out)
-        j += 1
-      }
-      new GenericArrayData(arr)
-    }
+    if (buf(numHashes) == 0) null else MinHashSignature.hex(buf, numHashes)
 
   override def serialize(buf: Array[Int]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate((numHashes + 1) * 4)

@@ -1,5 +1,7 @@
 package graft.expressions
 
+import java.security.MessageDigest
+
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -7,26 +9,17 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-document MinHash signature as ONE per-row expression:
-  * `MinHashSignature(text, k, numHashes)` tokenizes on spaces, forms word
-  * k-shingles, and returns `numHashes` minima over the shingle set —
+  * `MinHashSignature(text, k, numHashes)` walks the word k-shingles
+  * ([[WordGrams]]) and returns `numHashes` minima over the shingle set —
   * value-identical to exploding
   * [[graft.functions.TextFunctions.shingles]] and aggregating with
   * [[MinHashSig]] (and to the DuckDB band CTE the oracles run), but with no
   * generator, no aggregate, and no per-shingle row materialization: the
   * signature pass becomes an embarrassingly parallel projection, the ideal
   * 100 TB shape (dedup state never leaves the row until the tiny
-  * (doc_id, band_key) projection shuffles).
-  *
-  * Hash family (shared with [[MinHashSig]] and the oracle CTEs): component
-  * `i` is the 8-hex-char chunk `i % 4` of md5 stream `i / 4`, where stream 0
-  * is `md5(shingle)` and stream `t > 0` is `md5("t:" || shingle)` — the same
-  * stream convention as the 64-bit SimHash. One md5 call yields FOUR
-  * independent uniform 32-bit components, so a 16-hash signature costs 4
-  * digests per shingle instead of 16; min over equal-length lowercase-hex
-  * strings is min over the 32-bit values. A 32-bit component range is ample
-  * for min-wise hashing: a spurious shared minimum between two documents
-  * needs an md5-chunk collision at the min itself (~|A∪B| / 2^32 per
-  * component), and LSH candidates are Jaccard-refined downstream anyway.
+  * (doc_id, band_key) projection shuffles). Each shingle is hashed as its
+  * byte span of the document, in place: building the String, splitting it
+  * and materializing each shingle's bytes cost ~3× the md5 work itself.
   *
   * Null (⇒ no LSH bands, the "cannot near-dup" contract) for null text and
   * for documents shorter than k words. Duplicate shingles need no dedup:
@@ -39,105 +32,98 @@ case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int)
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_signature expects a string column, got ${child.dataType}")
+    WordGrams.checkText("minhash_signature", child.dataType)
 
-  @transient private lazy val digests: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  private val numStreams: Int = (numHashes + 3) / 4
-
-  // stream 0 is unprefixed; stream t hashes "t:" || shingle
-  private val streamPrefixes: Array[Array[Byte]] =
-    (0 until numStreams).map(t =>
-      if (t == 0) Array.emptyByteArray else s"$t:".getBytes("UTF-8")).toArray
+  private val prefixes = MinHashSignature.streamPrefixes(numHashes)
 
   override protected def nullSafeEval(input: Any): Any = {
-    // Token semantics identical to `toString.split(" ", -1)` (split with
-    // limit -1 keeps trailing empty tokens), evaluated ZERO-COPY on the
-    // UTF-8 bytes (round 15 — profiled at sf0.1: the String + split +
-    // per-shingle StringBuilder/getBytes materialization was ~3× the md5
-    // work itself, ~90µs/doc single-task). The byte form is exact:
-    // 0x20 never occurs inside a multi-byte UTF-8 sequence, so byte-level
-    // splitting on ' ' equals char-level splitting, and a k-shingle
-    // joined with ' ' is BY CONSTRUCTION the original byte span from the
-    // start of word s to the end of word s+k−1 (each boundary was one
-    // space) — no shingle string is ever built, md5 streams straight
-    // over the document's byte array. Assumes well-formed UTF-8 (the
-    // parquet string contract): the old toString path replaced malformed
-    // sequences with U+FFFD before hashing, so only on invalid bytes
-    // could the byte walk and the char-split reference diverge.
     val bytes = input.asInstanceOf[UTF8String].getBytes
-    val n = bytes.length
-    // word start offsets: starts(w) for w in [0, nWords); word w ends at
-    // starts(w+1)−1 (the space) or at n for the last word
-    var nWords = 1
-    var p = 0
-    while (p < n) { if (bytes(p) == ' '.toByte) nWords += 1; p += 1 }
-    if (nWords < shingleK) return null
-    val starts = new Array[Int](nWords + 1)
-    var w = 1
-    p = 0
-    while (p < n) {
-      if (bytes(p) == ' '.toByte) { starts(w) = p + 1; w += 1 }
-      p += 1
-    }
-    starts(nWords) = n + 1 // sentinel: end(w) = starts(w+1) − 1
-    // per-component 4-byte minima, packed as ints (unsigned compare)
-    val mins = new Array[Int](numHashes)
-    java.util.Arrays.fill(mins, -1) // 0xffffffff = unsigned max
-    val md = digests.get()
-    val h = new Array[Byte](16) // reused digest output buffer
+    val starts = WordGrams.starts(bytes)
+    val nShingles = WordGrams.count(starts, shingleK)
+    if (nShingles <= 0) return null
+    val mins = Array.fill(numHashes)(-1) // 0xffffffff = unsigned max
     var s = 0
-    while (s <= nWords - shingleK) {
-      val off = starts(s)
-      val len = starts(s + shingleK) - 1 - off
-      var t = 0
-      while (t < numStreams) {
-        // MessageDigest, deliberately: a from-scratch one-block MD5 was
-        // prototyped and MEASURED SLOWER (0.60s vs 0.45s for the sf0.1
-        // single-task scan) — the JDK intrinsifies MD5's compression
-        // (JDK-8250902), so the state-machine overhead is cheaper than
-        // losing the intrinsic
-        md.reset()
-        if (streamPrefixes(t).length > 0) md.update(streamPrefixes(t))
-        md.update(bytes, off, len)
-        try md.digest(h, 0, 16)
-        catch { case e: java.security.DigestException =>
-          throw new IllegalStateException(e) }
-        var c = 0
-        val lim = math.min(4, numHashes - t * 4)
-        while (c < lim) {
-          val v = ((h(4 * c) & 0xff) << 24) | ((h(4 * c + 1) & 0xff) << 16) |
-            ((h(4 * c + 2) & 0xff) << 8) | (h(4 * c + 3) & 0xff)
-          val i = t * 4 + c
-          if (java.lang.Integer.compareUnsigned(v, mins(i)) < 0) mins(i) = v
-          c += 1
-        }
-        t += 1
-      }
+    while (s < nShingles) {
+      MinHashSignature.fold(prefixes, bytes, starts(s),
+        WordGrams.length(starts, s, shingleK), mins, numHashes)
       s += 1
     }
-    val hex = "0123456789abcdef"
-    val arr = new Array[Any](numHashes)
-    var j = 0
-    while (j < numHashes) {
-      val v = mins(j)
-      val out = new Array[Byte](8)
-      var i = 0
-      while (i < 8) {
-        out(i) = hex.charAt((v >>> (28 - 4 * i)) & 0xf).toByte
-        i += 1
-      }
-      arr(j) = UTF8String.fromBytes(out)
-      j += 1
-    }
-    new GenericArrayData(arr)
+    MinHashSignature.hex(mins, numHashes)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** THE MinHash hash family, shared by [[MinHashSignature]], the
+  * [[MinHashSig]] aggregate and the DuckDB band CTE of the oracles:
+  * component `i` is the 8-hex-char chunk `i % 4` of md5 stream `i / 4`,
+  * where stream 0 is `md5(shingle)` and stream `t > 0` is
+  * `md5("t:" || shingle)` — the same stream convention as the 64-bit
+  * SimHash. One md5 call yields FOUR independent uniform 32-bit
+  * components, so a 16-hash signature costs 4 digests per shingle instead
+  * of 16; min over equal-length lowercase-hex strings is min over the
+  * unsigned 32-bit values, which is how the minima are kept. A 32-bit
+  * component range is ample for min-wise hashing: a spurious shared
+  * minimum between two documents needs an md5-chunk collision at the min
+  * itself (~|A∪B| / 2^32 per component), and LSH candidates are
+  * Jaccard-refined downstream anyway.
+  */
+object MinHashSignature {
+
+  // MessageDigest, deliberately: a from-scratch one-block MD5 measured
+  // slower (0.60 s vs 0.45 s for the sf0.1 single-task scan), because the
+  // JDK intrinsifies MD5's compression (JDK-8250902). One digest and one
+  // output buffer per thread: expressions and aggregate instances can be
+  // shared by concurrently running local tasks.
+  private final class Md5 {
+    val md: MessageDigest = MessageDigest.getInstance("MD5")
+    val out = new Array[Byte](16)
+  }
+  private val md5s = ThreadLocal.withInitial(() => new Md5)
+
+  /** Per-stream prefixes: stream 0 is unprefixed, stream t hashes "t:". */
+  def streamPrefixes(numHashes: Int): Array[Array[Byte]] =
+    Array.tabulate((numHashes + 3) / 4)(t =>
+      if (t == 0) Array.emptyByteArray else s"$t:".getBytes("UTF-8"))
+
+  /** Folds the byte span `(off, len)` of `bytes` into `mins(0 until numHashes)`. */
+  def fold(prefixes: Array[Array[Byte]], bytes: Array[Byte], off: Int, len: Int,
+      mins: Array[Int], numHashes: Int): Unit = {
+    val m = md5s.get()
+    val h = m.out
+    var t = 0
+    while (t < prefixes.length) {
+      m.md.reset()
+      if (prefixes(t).length > 0) m.md.update(prefixes(t))
+      m.md.update(bytes, off, len)
+      try m.md.digest(h, 0, 16)
+      catch { case e: java.security.DigestException =>
+        throw new IllegalStateException(e) }
+      var c = 0
+      val lim = math.min(4, numHashes - t * 4)
+      while (c < lim) {
+        val v = ((h(4 * c) & 0xff) << 24) | ((h(4 * c + 1) & 0xff) << 16) |
+          ((h(4 * c + 2) & 0xff) << 8) | (h(4 * c + 3) & 0xff)
+        val i = t * 4 + c
+        if (java.lang.Integer.compareUnsigned(v, mins(i)) < 0) mins(i) = v
+        c += 1
+      }
+      t += 1
+    }
+  }
+
+  private val HexDigits = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** The signature column: `mins(0 until numHashes)` as 8-char lowercase hex. */
+  def hex(mins: Array[Int], numHashes: Int): GenericArrayData =
+    new GenericArrayData(Array.tabulate[Any](numHashes) { j =>
+      val out = new Array[Byte](8)
+      var i = 0
+      while (i < 8) {
+        out(i) = HexDigits((mins(j) >>> (28 - 4 * i)) & 0xf)
+        i += 1
+      }
+      UTF8String.fromBytes(out)
+    })
 }

@@ -8,12 +8,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
   * SIGMOD 2003) as ONE per-row expression: `WinnowFingerprints(text,
-  * gramK, window)` tokenizes on spaces, hashes every word `gramK`-gram
+  * gramK, window)` walks the word `gramK`-grams ([[WordGrams]]), hashes each
   * (first 16 bits of md5 — the engine-portable hex fold the DuckDB
   * oracles mirror with `conv(substring(md5(g),1,4),16,10)`), and returns
   * the DISTINCT minima of every `window`-wide sliding window, in first-
-  * occurrence order — value-identical to the
-  * the test-only `graft.functions.LambdaReference.winnowFingerprintsLambda` column
+  * occurrence order — value-identical to the test-only
+  * `graft.functions.LambdaReference.winnowFingerprintsLambda` column
   * form (spec-pinned differentially) and to the oracle CTEs.
   *
   * WHY an Expression when array lambdas express the same thing: Spark's
@@ -28,9 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * order as [[MinHashSignature]]/[[GearChunker]]: native `Expression`
   * over lambda chains over UDFs for the 100 TB row-local hot path.
   *
-  * Semantics pinned to the lambda form: split on single spaces with
-  * trailing empties kept; docs with fewer than `gramK` tokens (and NULL
-  * text) yield an EMPTY array, never null; when the gram count is
+  * Semantics pinned to the lambda form: words as in [[WordGrams]]; docs
+  * with fewer than `gramK` words (and NULL text) yield an EMPTY array,
+  * never null; when the gram count is
   * positive but below `window`, the single window is the whole hash
   * list (the `greatest(1, n−w+1)`/truncated-slice rule).
   */
@@ -42,11 +42,7 @@ case class WinnowFingerprints(child: Expression, gramK: Int, window: Int)
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow_fingerprints expects a string column, got ${child.dataType}")
+    WordGrams.checkText("winnow_fingerprints", child.dataType)
 
   @transient private lazy val digests: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
@@ -56,40 +52,21 @@ case class WinnowFingerprints(child: Expression, gramK: Int, window: Int)
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return empty // the lambda form's null-text contract
-    // zero-copy byte walk (round 15, the [[MinHashSignature]] rewrite):
-    // split(" ", -1) semantics are exact on raw UTF-8 bytes (0x20 never
-    // occurs inside a multi-byte sequence) and a gram joined with ' ' IS
-    // the original byte span from word i to word i+gramK−1, so no gram
-    // string is ever built; MessageDigest digests the span in place.
-    // Assumes well-formed UTF-8 input (the parquet string contract): the
-    // old toString path replaced malformed sequences with U+FFFD before
-    // hashing, so only on invalid bytes could the two forms differ
+    // each gram's md5 runs over its byte span of the document, in place
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val n = bytes.length
-    var nWords = 1
-    var p = 0
-    while (p < n) { if (bytes(p) == ' '.toByte) nWords += 1; p += 1 }
-    val nGrams = nWords - gramK + 1
+    val starts = WordGrams.starts(bytes)
+    val nGrams = WordGrams.count(starts, gramK)
     if (nGrams <= 0) return empty
-    val starts = new Array[Int](nWords + 1)
-    var ww = 1
-    p = 0
-    while (p < n) {
-      if (bytes(p) == ' '.toByte) { starts(ww) = p + 1; ww += 1 }
-      p += 1
-    }
-    starts(nWords) = n + 1 // sentinel: end(w) = starts(w+1) − 1
     // gram hashes: first 2 md5 digest bytes as an unsigned 16-bit long.
-    // MessageDigest, deliberately — see [[MinHashSignature]]: a hand
-    // one-block MD5 measured slower than the JDK's intrinsified one
+    // MessageDigest, deliberately — see the MinHashSignature companion: a
+    // hand one-block MD5 measured slower than the JDK's intrinsified one
     val md = digests.get()
     val h = new Array[Byte](16)
     val hashes = new Array[Long](nGrams)
     var i = 0
     while (i < nGrams) {
-      val off = starts(i)
       md.reset()
-      md.update(bytes, off, starts(i + gramK) - 1 - off)
+      md.update(bytes, starts(i), WordGrams.length(starts, i, gramK))
       try md.digest(h, 0, 16)
       catch { case e: java.security.DigestException =>
         throw new IllegalStateException(e) }

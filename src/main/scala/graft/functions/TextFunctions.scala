@@ -50,42 +50,32 @@ object TextFunctions {
         org.apache.spark.sql.GraftBridge.expression(c), maskBits))
 
   /** Distinct k-gram (word) shingles, computed row-wise — no explode, no
-    * shuffle. Docs shorter than k words → empty array. Since round 13
-    * this is the native [[graft.expressions.ShingleSet]] expression (the
-    * WinnowFingerprints rationale: array HOFs have no codegen and this
-    * column sits on every shingle-dedup hot path plus the
-    * quality-features repetition ratio). */
+    * shuffle. Docs shorter than k words → empty array. This is the native
+    * [[graft.expressions.ShingleSet]] expression (the WinnowFingerprints
+    * rationale: array HOFs have no codegen and this column sits on every
+    * shingle-dedup hot path plus the quality-features repetition ratio). */
   def shingles(c: Column, k: Int = 2): Column =
     org.apache.spark.sql.GraftBridge.column(
       graft.expressions.ShingleSet(
         org.apache.spark.sql.GraftBridge.expression(c), k))
 
-  // The original array-lambda formulation lives TEST-ONLY as
-  // graft.functions.LambdaReference.shinglesLambda (the differential
-  // parity reference for ShingleSet) — deliberately unreachable from
-  // queries/, being ~10× the native expression.
+  // The original array-lambda formulations of shingles and of the MinHash
+  // signature live TEST-ONLY in graft.functions.LambdaReference
+  // (shinglesLambda, minhashSignatureLambda: the differential parity
+  // references for ShingleSet and MinHashSignature) — deliberately
+  // unreachable from queries/, being ~10× the native expressions.
 
-  /** One MinHash component of THE canonical hash family — identical to
-    * [[graft.expressions.MinHashSignature]], [[graft.expressions.MinHashSig]]
-    * and the DuckDB band CTE, so signatures built here band-match the
-    * Dedup operators and any persisted dedup index: component `i` is the
-    * min over shingles of the 8-hex-char chunk `i % 4` of md5 stream
-    * `i / 4` (stream 0 unprefixed, stream t = "t:"||x). Lowercase-hex
-    * ordering is identical in Spark and DuckDB, which keeps signatures
-    * oracle-checkable. (A previous free-standing formulation here hashed
-    * differently from the canonical family — a drift trap for callers.) */
-  def minhash(shingleArr: Column, component: Int): Column = {
-    val stream = component / 4
-    val chunk = component % 4
-    array_min(transform(shingleArr, x =>
-      substring(if (stream == 0) md5(x) else md5(concat(lit(s"$stream:"), x)),
-        chunk * 8 + 1, 8)))
-  }
-
-  /** Full signature as an array of `numHashes` hex minima (canonical
-    * family; see [[minhash]]). */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i => minhash(shingleArr, i)): _*)
+  /** Whole-document MinHash signature: `numHashes` 8-hex-char minima over
+    * the distinct word `shingleK`-shingles of `text`, in THE canonical hash
+    * family ([[graft.expressions.MinHashSignature]], shared with the
+    * [[graft.expressions.MinHashSig]] aggregate and the DuckDB band CTE),
+    * so signatures built here band-match the Dedup operators and any
+    * persisted dedup index. Null for null text and for text with fewer
+    * than `shingleK` words. */
+  def minhashSignature(text: Column, numHashes: Int, shingleK: Int = 2): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      graft.expressions.MinHashSignature(
+        org.apache.spark.sql.GraftBridge.expression(text), shingleK, numHashes))
 
   /** SimHash over the distinct word set, `bits` wide (≤ 64). Bit j of a
     * word's hash is the high bit of hex digit j of md5(word) for j ≤ 32 and

@@ -213,10 +213,8 @@ object Dedup {
   private def signatures(docs: DataFrame, idCol: Column, textCol: Column,
       numHashes: Int, shingleK: Int): DataFrame =
     Parallelism.fanOut(docs.select(idCol.as("doc_id"), textCol.as("__text")))
-      .select(col("doc_id"), org.apache.spark.sql.GraftBridge.column(
-        graft.expressions.MinHashSignature(
-          org.apache.spark.sql.GraftBridge.expression(col("__text")),
-          shingleK, numHashes)).as("sig"))
+      .select(col("doc_id"),
+        minhashSignature(col("__text"), numHashes, shingleK).as("sig"))
       .filter(col("sig").isNotNull)
 
   private def bandsFromSig(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {

@@ -3890,10 +3890,10 @@ object PipelineQueries {
         val sigs = graft.plans.LazyCheckpoint.of(
           graft.operators.Parallelism.fanOut(
               docs.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), shingles(col("text"), 2).as("sh"))
+            .select(col("doc_id"), col("text"), shingles(col("text"), 2).as("sh"))
             .filter(size(col("sh")) > 0)
             .select(col("doc_id"), col("sh"),
-              TextFunctions.minhashSignature(col("sh"), NumHashes).as("sig")))
+              TextFunctions.minhashSignature(col("text"), NumHashes).as("sig")))
         pairs
           .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
             col("sh").as("sh_a")), "doc_a")

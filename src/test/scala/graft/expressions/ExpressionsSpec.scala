@@ -7,6 +7,10 @@ import graft.functions.{TextFunctions, VectorFunctions}
 class ExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
+  // the shared word-walk edge table, ids 100 + its index
+  private def edgeDocs = graft.functions.LambdaReference.wordWalkEdges
+    .zipWithIndex.map { case (t, i) => (100L + i, t) }.toDF("doc_id", "text")
+
   test("CosineSimilarity native expression is bit-identical to the HOF formulation") {
     val hof = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       VectorFunctions.dot(a, b) / (VectorFunctions.norm(a) * VectorFunctions.norm(b))
@@ -84,13 +88,13 @@ class ExpressionsSpec extends SparkSpec {
       (3L, "short"),            // < k words: no signature
       (4L, "trailing space "),  // empty trailing token must match split(-1)
       (5L, ""),
-      // byte-walk pins (round 15, zero-copy eval): consecutive spaces
-      // (empty middle tokens), a leading space, and multi-byte UTF-8
-      // words (0x20 must split at the same places the char walk did)
+      // byte-walk pins: consecutive spaces (empty middle tokens), a
+      // leading space, and multi-byte UTF-8 words (0x20 must split at the
+      // same places a char-level split does)
       (6L, "double  space  tokens here"),
       (7L, " leading space doc"),
       (8L, "víde😀 ünïcode wörds détails")
-    ).toDF("doc_id", "text")
+    ).toDF("doc_id", "text").unionAll(edgeDocs)
 
     val viaExpr = docs.select(col("doc_id"),
       org.apache.spark.sql.GraftBridge.column(MinHashSignature(
@@ -106,8 +110,20 @@ class ExpressionsSpec extends SparkSpec {
     val viaAgg = sh.groupBy("doc_id").agg(sigAgg.as("sig"))
       .orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq
 
+    // the test-only array-lambda references, independent of the byte walk
+    val viaLambda = docs.select(col("doc_id"),
+        graft.functions.LambdaReference.shinglesLambda(col("text"), 2).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .select(col("doc_id"),
+        graft.functions.LambdaReference.minhashSignatureLambda(col("sh"), 16).as("sig"))
+      .orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq
+
     assert(viaExpr == viaAgg)
-    assert(viaExpr.map(_._1) == Seq(1L, 2L, 4L, 6L, 7L, 8L))
+    assert(viaExpr == viaLambda)
+    // edge rows with two or more words: " ", "a b", "a b a b a", "x  y  z",
+    // the leading- and trailing-space docs and the multi-byte one
+    assert(viaExpr.map(_._1) == Seq(1L, 2L, 4L, 6L, 7L, 8L) ++
+      Seq(102L, 104L, 105L, 106L, 107L, 108L, 109L))
   }
 
   test("VectorSum mean pairing: malformed vectors are excluded from sum AND divisor") {

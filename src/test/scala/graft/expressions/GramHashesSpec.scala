@@ -35,18 +35,23 @@ class GramHashesSpec extends SparkSpec {
     (6L, "a  b c") // double space: empty middle token survives the split
   ).toDF("doc_id", "text")
 
+  // docs plus the shared word-walk edge table, ids 100 + its index
+  private val edgeDocs = docs.unionAll(graft.functions.LambdaReference
+    .wordWalkEdges.zipWithIndex.map { case (t, i) => (100L + i, t) }
+    .toDF("doc_id", "text"))
+
   test("positions match the lambda form exactly, for several k") {
-    for (k <- Seq(2, 3, 8)) {
-      val h = hashed(docs, k).select("doc_id", "start")
-      val s = stringGrams(docs, k).select("doc_id", "start")
+    for (k <- Seq(1, 2, 3, 8)) {
+      val h = hashed(edgeDocs, k).select("doc_id", "start")
+      val s = stringGrams(edgeDocs, k).select("doc_id", "start")
       assert(rowSet(h) === rowSet(s), s"k=$k start sets differ")
     }
   }
 
   test("hash equality classes == gram-string equality classes") {
     val k = 3
-    val joined = hashed(docs, k).as("h")
-      .join(stringGrams(docs, k).as("s"),
+    val joined = hashed(edgeDocs, k).as("h")
+      .join(stringGrams(edgeDocs, k).as("s"),
         col("h.doc_id") === col("s.doc_id") && col("h.start") === col("s.start"))
       .select(col("h.gh").as("gh"), col("s.gram").as("gram"))
     // same hash ⟺ same gram: each gh maps to exactly one gram and back

@@ -4,16 +4,25 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** TEST-ONLY differential references: the original array-lambda
-  * formulations of [[graft.expressions.ShingleSet]] and
-  * [[graft.expressions.WinnowFingerprints]], kept so the specs can pin
+  * formulations of [[graft.expressions.ShingleSet]],
+  * [[graft.expressions.WinnowFingerprints]] and
+  * [[graft.expressions.MinHashSignature]], kept so the specs can pin
   * the native expressions element-for-element against an independent
-  * derivation. Deliberately OUT of main (round-14 directive): Spark's
+  * derivation. Deliberately OUT of main: Spark's
   * higher-order array functions have no codegen, so these forms pay
   * interpreted per-gram md5 + per-window slice allocation — measured
   * ~10× the native expressions at sf0.1 — and nothing in `queries/`
   * must be able to reach for them.
   */
 object LambdaReference {
+
+  /** The edge inputs every word-walk kernel's parity test runs
+    * ([[graft.expressions.WordGrams]]): null, empty and all-space text,
+    * one and two words, repeated grams, empty middle words, a leading and
+    * a trailing space, and multi-byte UTF-8 words up to a 4-byte emoji. */
+  val wordWalkEdges: Seq[String] = Seq(null, "", " ", "a", "a b",
+    "a b a b a", "x  y  z", " leading space", "trailing space ",
+    "víde😀 ünïcode wörds détails müst mätch")
 
   /** Lambda form of [[TextFunctions.shingles]] /
     * [[graft.expressions.ShingleSet]]: distinct word k-gram shingles via
@@ -45,4 +54,21 @@ object LambdaReference {
           array_min(slice(hashes, j, lit(window))))))
       .otherwise(array().cast("array<long>"))
   }
+
+  /** One MinHash component over a shingle array, in the canonical family
+    * ([[graft.expressions.MinHashSignature]]): the min over shingles of the
+    * 8-hex-char chunk `i % 4` of md5 stream `i / 4` (stream 0 unprefixed,
+    * stream t = "t:" || x). An empty array gives null. */
+  def minhashLambda(shingleArr: Column, component: Int): Column = {
+    val stream = component / 4
+    val chunk = component % 4
+    array_min(transform(shingleArr, x =>
+      substring(if (stream == 0) md5(x) else md5(concat(lit(s"$stream:"), x)),
+        chunk * 8 + 1, 8)))
+  }
+
+  /** Lambda form of [[TextFunctions.minhashSignature]] over a shingle
+    * array: `numHashes` [[minhashLambda]] components. */
+  def minhashSignatureLambda(shingleArr: Column, numHashes: Int): Column =
+    array((0 until numHashes).map(i => minhashLambda(shingleArr, i)): _*)
 }

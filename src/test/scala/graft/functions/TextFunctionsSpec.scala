@@ -48,20 +48,22 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("minhash: permutation-invariant and in [0, numHashes] component count") {
     val df = Seq("a b c d e f", "f e d c b a").toDF("t")
-    val sigs = df.select(minhashSignature(shingles(col("t"), 1), 8).as("s"))
-      .as[Seq[String]].collect()
-    assert(sigs(0).length == 8)
-    // shingles(k=1) = distinct unigrams: same set for both rows
-    assert(sigs(0) == sigs(1))
+    for (sig <- Seq(minhashSignature(col("t"), 8, shingleK = 1),
+        LambdaReference.minhashSignatureLambda(
+          LambdaReference.shinglesLambda(col("t"), 1), 8))) {
+      val sigs = df.select(sig.as("s")).as[Seq[String]].collect()
+      assert(sigs(0).length == 8)
+      // k = 1 shingles = distinct unigrams: same set for both rows
+      assert(sigs(0) == sigs(1))
+    }
   }
 
   test("minhashSignature matches the canonical MinHashSignature expression exactly") {
     val df = Seq("the quick brown fox jumps over the lazy dog today").toDF("t")
     val rows = df.select(
-      minhashSignature(shingles(col("t"), 2), 16).as("hof"),
-      org.apache.spark.sql.GraftBridge.column(
-        graft.expressions.MinHashSignature(
-          org.apache.spark.sql.GraftBridge.expression(col("t")), 2, 16)).as("native"))
+      LambdaReference.minhashSignatureLambda(
+        LambdaReference.shinglesLambda(col("t"), 2), 16).as("hof"),
+      minhashSignature(col("t"), 16).as("native"))
       .as[(Seq[String], Seq[String])].collect()(0)
     assert(rows._1 === rows._2,
       "column-form and native signatures must be the SAME hash family")
@@ -127,18 +129,17 @@ class TextFunctionsSpec extends SparkSpec {
       "element-for-element, on real corpus text + edge cases") {
     import org.apache.spark.sql.functions._
     // the native expression replaced the lambda chain on the hot path
-    // (round 13 — HOFs have no codegen); this differential pin is the
+    // (HOFs have no codegen); this differential pin is the
     // contract that the swap changed NOTHING: same values, same order,
     // same empties, across real text, nulls, short docs, repeated
     // tokens, and both non-default parameterizations
     val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001",
         "documents").select(col("text")).limit(200)
-      .unionAll(Seq(null.asInstanceOf[String], "", " ", "a", "a b",
+      .unionAll((LambdaReference.wordWalkEdges ++ Seq(
         "a b c", "a b c d e f g", "x x x x x x x x",
-        // byte-walk pins (round 15, zero-copy eval): consecutive spaces
-        // (empty tokens), leading/trailing space, multi-byte UTF-8 words
-        "double  space  here", " leading trailing ",
-        "víde😀 ünïcode wörds détails müst mätch").toDF("text"))
+        // byte-walk pins: consecutive spaces (empty tokens) and a leading
+        // plus trailing space in one doc
+        "double  space  here", " leading trailing ")).toDF("text"))
     for ((g, w) <- Seq((3, 4), (2, 3), (1, 2))) {
       val rows = docs.select(
           TextFunctions.winnowFingerprints(col("text"), g, w).as("e"),
@@ -156,8 +157,7 @@ class TextFunctionsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001",
         "documents").select(col("text")).limit(200)
-      .unionAll(Seq(null.asInstanceOf[String], "", " ", "a", "a b",
-        "a b a b a", "x  y  z").toDF("text"))
+      .unionAll(LambdaReference.wordWalkEdges.toDF("text"))
     for (k <- Seq(1, 2, 3)) {
       val rows = docs.select(
           TextFunctions.shingles(col("text"), k).as("e"),
