@@ -1,9 +1,11 @@
 package graft.ingest
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.functions.Durations
+import graft.model.Schemas
 
 /** Landing-zone parsers: captured YouTube-API-response-shaped JSON →
   * per-entity DataFrames, replicating the reference's extract projections
@@ -16,13 +18,19 @@ import graft.functions.Durations
   * comments-disabled video simply contributes zero comment rows instead of
   * aborting the extract.
   *
+  * Each file is read with its declared schema (`Schemas.landing*`), which
+  * covers exactly the fields the parser selects: no schema-inference job
+  * runs, and a batch in which no item carries an optional field (`country`,
+  * `tags`, or `commentCount` when every video has comments disabled) parses
+  * that field to null instead of failing analysis.
+  *
   * Scale posture: each parser is scan → explode → project; Spark
   * parallelizes over landing files, and nothing touches the driver.
   */
 object Landing {
 
-  private def readJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", true).json(path)
+  private def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).option("multiLine", true).json(path)
 
   /** `int(x)`-style counter cast (app.py:36–38,138,140–141): string counters
     * → long, absent/null-safe. */
@@ -30,7 +38,7 @@ object Landing {
 
   /** S1 — channel snippet/stats/status projection (app.py:32–41). */
   def channels(spark: SparkSession, path: String): DataFrame =
-    readJson(spark, path)
+    readJson(spark, path, Schemas.landingChannels)
       .select(explode(col("items")).as("it"))
       .select(
         col("it.snippet.title").as("channel_name"),
@@ -45,7 +53,7 @@ object Landing {
 
   /** S2 — playlist pages (app.py:60–63); pagination = many landing docs. */
   def playlists(spark: SparkSession, path: String): DataFrame =
-    readJson(spark, path)
+    readJson(spark, path, Schemas.landingPlaylists)
       .select(explode(col("items")).as("it"))
       .select(
         col("it.snippet.channelId").as("channel_id"),
@@ -55,7 +63,7 @@ object Landing {
   /** S3 — video details (app.py:128–144), including the ISO-8601 duration
     * parse (S7) and hd/sd quality flag. */
   def videos(spark: SparkSession, path: String): DataFrame =
-    readJson(spark, path)
+    readJson(spark, path, Schemas.landingVideos)
       .select(explode(col("items")).as("it"))
       .select(
         col("it.snippet.channelTitle").as("channel_name"),
@@ -76,7 +84,7 @@ object Landing {
 
   /** S4 — top-level comment threads (app.py:184–189; 5-deep nested path). */
   def comments(spark: SparkSession, path: String): DataFrame =
-    readJson(spark, path)
+    readJson(spark, path, Schemas.landingComments)
       .select(explode(col("items")).as("it"))
       .select(
         col("it.snippet.topLevelComment.snippet.videoId").as("video_id"),

@@ -8,9 +8,13 @@ import org.apache.spark.sql.types._
   * 32–41, 60–63, 128–144, 184–189) as typed case classes plus explicit
   * `StructType`s for each zone.
   *
-  * Zones: landing (captured API-response JSON, schema-on-read), lake (one
-  * nested document per channel, app.py:237–242), warehouse (four flat
-  * tables, INSERT lists at app.py:300–305,322–327,354–358,372–376).
+  * Zones: landing (captured API-response JSON, read with the declared
+  * `landing*` schemas below), lake (one nested document per channel,
+  * app.py:237–242), warehouse (four flat tables, INSERT lists at
+  * app.py:300–305,322–327,354–358,372–376). The ELT commit path (landing
+  * parse, `AtomicCommit.migrateAtomic`, `AtomicCommit.registerViews`)
+  * reads every zone with its declared schema and runs no schema-inference
+  * job.
   */
 object Schemas {
 
@@ -54,6 +58,52 @@ object Schemas {
       comments: String,
       commented_date: Timestamp)
 
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** One API response document: a page of `items`. */
+  private def page(item: (String, DataType)*): StructType =
+    struct("items" -> ArrayType(struct(item: _*)))
+
+  /* Landing zone: API-response JSON as the YouTube Data API returns it,
+   * declared down to exactly the fields the `graft.ingest.Landing`
+   * parsers select (fields in the alphabetical order JSON inference gives).
+   * Counters stay strings, as the API sends them. A field no item of a
+   * batch carries reads as null instead of failing analysis. */
+
+  val landingChannels: StructType = page(
+    "contentDetails" -> struct("relatedPlaylists" -> struct("uploads" -> StringType)),
+    "id" -> StringType,
+    "snippet" -> struct(
+      "country" -> StringType, "publishedAt" -> StringType, "title" -> StringType),
+    "statistics" -> struct("subscriberCount" -> StringType,
+      "videoCount" -> StringType, "viewCount" -> StringType),
+    "status" -> struct("privacyStatus" -> StringType))
+
+  val landingPlaylists: StructType = page(
+    "id" -> StringType,
+    "snippet" -> struct("channelId" -> StringType, "title" -> StringType))
+
+  val landingVideos: StructType = page(
+    "contentDetails" -> struct("caption" -> StringType,
+      "definition" -> StringType, "duration" -> StringType),
+    "id" -> StringType,
+    "snippet" -> struct(
+      "channelId" -> StringType, "channelTitle" -> StringType,
+      "description" -> StringType, "publishedAt" -> StringType,
+      "tags" -> ArrayType(StringType),
+      "thumbnails" -> struct("default" -> struct("url" -> StringType)),
+      "title" -> StringType),
+    "statistics" -> struct("commentCount" -> StringType,
+      "favoriteCount" -> StringType, "likeCount" -> StringType,
+      "viewCount" -> StringType))
+
+  val landingComments: StructType = page(
+    "id" -> StringType,
+    "snippet" -> struct("topLevelComment" -> struct("snippet" -> struct(
+      "authorDisplayName" -> StringType, "publishedAt" -> StringType,
+      "textDisplay" -> StringType, "videoId" -> StringType))))
+
   val channelSchema: StructType = StructType(Seq(
     StructField("channel_name", StringType),
     StructField("channel_id", StringType),
@@ -96,7 +146,8 @@ object Schemas {
 
   /** Lake zone: one nested document per channel with four embedded entity
     * arrays (app.py:236–249). `channel_age`/`tags` live here but are dropped
-    * at migration, matching the reference (SURVEY §1.2). */
+    * at migration, matching the reference (SURVEY §1.2). `channel_name` is
+    * the partition column, so a read lists it after the four arrays. */
   val lakeDocSchema: StructType = StructType(Seq(
     StructField("channel_name", StringType),
     StructField("channel_details", ArrayType(channelSchema)),
@@ -120,9 +171,10 @@ object Schemas {
     StructType(cols.map(c => s(s.fieldIndex(c))))
 
   /** Post-migration warehouse table schemas, in INSERT-list column order
-    * (the exact shape [[graft.warehouse.Migration]] writes) — lets view
-    * registration resolve a table that has no committed rows yet as an
-    * EMPTY frame with the right columns instead of failing to resolve. */
+    * (the exact shape [[graft.warehouse.Migration]] writes). View
+    * registration reads every committed table with these, and resolves a
+    * table that has no committed rows yet as an EMPTY frame with the right
+    * columns instead of failing to resolve. */
   val warehouseSchemas: Map[String, StructType] = Map(
     "channel" -> project(channelSchema, warehouseChannelColumns),
     "playlist" -> playlistSchema,

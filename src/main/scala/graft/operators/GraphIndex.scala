@@ -145,18 +145,20 @@ object GraphIndex {
     // vectors scan FOLDABLE, so pruning is static file listing on
     // selective batches. Same rows, same scores — the query side simply
     // originates from a local relation instead of a per-pass re-scan.
-    val qLocal = {
-      val prepared = queries.select(
-        Similarity.signLshBucket(col("embedding"), planes).as("bucket"),
-        col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-      val rows = prepared.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        prepared.schema)
-    }
-    val wantedBuckets = qLocal.select("bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq
+    // A query with a null embedding has no bucket and no neighbors: it is
+    // dropped here (the sign hash alone would file it under bucket 0).
+    val prepared = queries.filter(col("embedding").isNotNull).select(
+      Similarity.signLshBucket(col("embedding"), planes).as("bucket"),
+      col("vec_id").as("query_id"), col("embedding").as("q_vec"))
+    val rows = prepared.collect()
+    val qLocal = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      prepared.schema)
+    val wantedBuckets = rows.map(_.getLong(0)).distinct.toSeq
+    // no bucket left (an empty batch, or only null embeddings): the same
+    // plan over an empty corpus side is the empty top-k frame
     val corpusB = vectorsAt(spark, path, m)
-      .filter(col("bucket").isin(wantedBuckets: _*))
+      .filter(if (wantedBuckets.isEmpty) lit(false)
+        else col("bucket").isin(wantedBuckets: _*))
       .select(col("bucket"),
         col("vec_id").as("neighbor_id"), col("embedding").as("n_vec"))
     val seeded = broadcast(qLocal).join(corpusB, "bucket")

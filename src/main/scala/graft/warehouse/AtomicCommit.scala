@@ -1,10 +1,16 @@
 package graft.warehouse
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+
+import graft.model.Schemas
 
 /** Cross-table transactional commit for the warehouse — the reference
   * commits once per channel across all four entity tables
@@ -19,17 +25,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plain file reads. A commit stages new segments for every table
   * ([[prepare]] — invisible, the manifest still points at the old segments)
   * and then publishes them all with ONE atomic manifest rename
-  * ([[publish]]). A crash anywhere before the rename leaves readers on the
-  * old snapshot across all four tables; orphaned staged segments are inert
-  * and get overwritten by the retry. Readers ([[snapshot]]) never list
-  * directories — they read exactly the manifest's segment list, so
-  * half-written data is unreachable by construction.
+  * ([[publish]]). The tables stage concurrently, one driver thread each, and
+  * the rename waits for all of them. A crash anywhere before the rename
+  * leaves readers on the old snapshot across all four tables; orphaned
+  * staged segments are inert and get overwritten by the retry. Readers
+  * ([[snapshot]]) never list directories — they read exactly the
+  * manifest's segment list, so half-written data is unreachable by
+  * construction.
   *
   * Scale: the manifest is O(tables × commits) text — the data path is still
   * plain parquet read over the manifest's segment paths, and the anti-join
   * idempotency guard is the same keyed shuffle as [[Migration
-  * .idempotentAppend]]. The rename is atomic on POSIX local filesystems and
-  * on HDFS (FileContext rename with OVERWRITE).
+  * .idempotentAppend]]. A commit is one concurrent wave of one write job
+  * per table: the fresh rows are counted inside the write, and every read
+  * on the commit path (lake, snapshot keys, views) uses a declared schema,
+  * so no schema-inference or counting job runs. The rename is atomic on
+  * POSIX local filesystems and on HDFS (FileContext rename with OVERWRITE).
   */
 object AtomicCommit {
 
@@ -69,25 +80,39 @@ object AtomicCommit {
 
   /** Stage one segment per table: batch-dedup on the primary key, anti-join
     * against the CURRENT snapshot (idempotent re-commit), write the fresh
-    * rows to `table/seg-<nextVersion>`. Tables with nothing fresh stage no
-    * segment. Nothing becomes visible until [[publish]]. */
+    * rows to `table/seg-<nextVersion>`. Nothing becomes visible until
+    * [[publish]].
+    *
+    * The tables stage concurrently, each on its own thread of a pool made
+    * for this call, so the threads inherit the caller's Spark local
+    * properties (job group, scheduler pool). Each table is one pass: the
+    * fresh rows are written once and counted in the same job
+    * (`Dataset.observe`); a table with nothing fresh has its staged
+    * directory deleted and stages no segment. Writing straight from the
+    * anti-join is safe: the snapshot it reads lists only committed
+    * segments, never the new `seg-<nextVersion>`. If any table fails, every
+    * other table is still waited for before the first failure is rethrown,
+    * so no staging job of a failed commit races the retry's write to the
+    * same segment. */
   def prepare(spark: SparkSession, root: String,
       tables: Map[String, (DataFrame, Seq[String])]): Staged = {
     val (version, current) = readManifest(spark, root)
     val next = version + 1
-    val staged = tables.map { case (t, (df, pk)) =>
-      val batch = df.dropDuplicates(pk)
-      val fresh = snapshot(spark, root, t) match {
-        case Some(existing) => batch.join(existing.select(pk.map(col): _*), pk, "left_anti")
-        case None => batch
+    val pool = Executors.newFixedThreadPool(tables.size max 1)
+    val staged = try {
+      val pending = tables.toSeq.map { case (t, (df, pk)) =>
+        pool.submit(new Callable[(String, Option[String], Long)] {
+          def call() = {
+            val (seg, n) = stage(spark, root, current.getOrElse(t, Seq.empty),
+              s"$t/seg-$next", df, pk)
+            (t, seg, n)
+          }
+        })
       }
-      fresh.cache()
-      val n = fresh.count()
-      val seg = s"$t/seg-$next"
-      if (n > 0) fresh.write.mode("overwrite").parquet(s"$root/$seg")
-      fresh.unpersist()
-      (t, if (n > 0) Some(seg) else None, n)
-    }
+      val done = pending.map(f => Try(f.get()))
+      done.collectFirst { case Failure(e: ExecutionException) => throw e.getCause }
+      done.map(_.get)
+    } finally pool.shutdown()
     val merged = staged.map { case (t, seg, _) =>
       s"$t=" + (current.getOrElse(t, Seq.empty) ++ seg).mkString(",")
     }
@@ -98,6 +123,30 @@ object AtomicCommit {
     val body = (Seq(s"version=$next") ++ merged ++ untouched).mkString("\n")
     Staged(root, next, body, staged.map { case (t, _, n) => t -> n }.toMap)
   }
+
+  /** One table's staging pass: the batch rows whose key is in none of
+    * `segs`, written to `seg` and counted in the same job. The snapshot is
+    * read for its key columns only, typed as the batch types them. Returns
+    * the staged segment (None when nothing is fresh) and the row count. */
+  private def stage(spark: SparkSession, root: String, segs: Seq[String],
+      seg: String, df: DataFrame, pk: Seq[String]): (Option[String], Long) = {
+    val batch = df.dropDuplicates(pk)
+    val fresh =
+      if (segs.isEmpty) batch
+      else batch.join(read(spark, root, segs, StructType(pk.map(batch.schema(_)))),
+        pk, "left_anti")
+    val rows = Observation()
+    val out = new Path(s"$root/$seg")
+    fresh.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(out.toString)
+    val n = rows.get("n").asInstanceOf[Long]
+    if (n == 0) out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    (if (n > 0) Some(seg) else None, n)
+  }
+
+  /** The manifest-listed segments `segs` of one table, read with `schema`. */
+  private def read(spark: SparkSession, root: String, segs: Seq[String],
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(segs.map(s => s"$root/$s"): _*)
 
   /** Atomically publish a staged commit: persist the versioned manifest
     * (`MANIFEST-v<N>` — the commit history [[snapshotAt]]/[[rollback]]
@@ -214,7 +263,7 @@ object AtomicCommit {
     * entity table advances to the new snapshot or none does. */
   def migrateAtomic(spark: SparkSession, lakePath: String,
       root: String): Map[String, Long] = {
-    val lake = spark.read.parquet(lakePath)
+    val lake = spark.read.schema(Schemas.lakeDocSchema).parquet(lakePath)
     commitTables(spark, root, Map(
       "channel" -> (Migration.channelTable(lake), Seq("channel_id")),
       "playlist" -> (Migration.playlistTable(lake), Seq("playlist_id")),
@@ -223,17 +272,21 @@ object AtomicCommit {
   }
 
   /** Temp-view registration resolving through the manifest (the atomic
-    * counterpart of [[Migration.registerViews]]). A table with no committed
-    * rows yet (snapshot None — e.g. an input channel with zero comments)
-    * registers as an EMPTY view with the migrated schema, so downstream
-    * queries return empty results instead of TABLE_OR_VIEW_NOT_FOUND —
-    * matching what [[Migration.registerViews]] resolves from an empty
-    * parquet table. */
-  def registerViews(spark: SparkSession, root: String): Unit =
-    graft.model.Schemas.warehouseSchemas.foreach { case (t, schema) =>
-      snapshot(spark, root, t)
-        .getOrElse(spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
+    * counterpart of [[Migration.registerViews]]). Each table is read with
+    * its declared warehouse schema, so registering runs no schema-inference
+    * job. A table with no committed rows yet (e.g. an input channel with
+    * zero comments) registers as an EMPTY view with the same schema, so
+    * downstream queries return empty results instead of
+    * TABLE_OR_VIEW_NOT_FOUND — matching what [[Migration.registerViews]]
+    * resolves from an empty parquet table. */
+  def registerViews(spark: SparkSession, root: String): Unit = {
+    val current = readManifest(spark, root)._2
+    Schemas.warehouseSchemas.foreach { case (t, schema) =>
+      val segs = current.getOrElse(t, Seq.empty)
+      (if (segs.nonEmpty) read(spark, root, segs, schema)
+       else spark.createDataFrame(
+         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
         .createOrReplaceTempView(t)
     }
+  }
 }

@@ -85,19 +85,6 @@ class JobCountSpec extends SparkSpec {
     "tx_bpe_train" -> 34, // (17) merge rounds
     "tx_quality_classifier" -> 162) // (81) GD training rounds
 
-  /** Exact listener-bus drain via reflection: `SparkContext.listenerBus`
-    * and `LiveListenerBus.waitUntilEmpty` are private[spark] in Scala
-    * but public in bytecode. A timed drain (not a sleep) makes the
-    * count attribution exact — no async job-start event can leak into
-    * the next query's window. */
-  private def drain(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-      .invoke(bus, java.lang.Long.valueOf(30000L))
-    ()
-  }
-
   private def withCounter[A](body: AtomicInteger => A): A = {
     val jobs = new AtomicInteger(0)
     val l = new SparkListener {

@@ -19,6 +19,19 @@ trait SparkSpec extends AnyFunSuite {
   def resource(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
 
+  /** Exact listener-bus drain via reflection: `SparkContext.listenerBus`
+    * and `LiveListenerBus.waitUntilEmpty` are private[spark] in Scala
+    * but public in bytecode. A timed drain (not a sleep) makes job
+    * attribution exact — every event posted so far has reached every
+    * listener and the status tracker when it returns. */
+  def drain(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+      .invoke(bus, java.lang.Long.valueOf(30000L))
+    ()
+  }
+
   /** Order-insensitive row comparison: rows as canonical strings. */
   def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

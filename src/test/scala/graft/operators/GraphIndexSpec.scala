@@ -68,6 +68,21 @@ class GraphIndexSpec extends SparkSpec {
     assert(served.count() > 0)
   }
 
+  test("an empty query batch serves an empty top-k frame") {
+    val got = GraphIndex.searchTopK(spark, path, queries.limit(0), k = 5)
+    assert(got.columns.toSeq == Seq("query_id", "neighbor_id", "sim"))
+    assert(got.count() == 0)
+  }
+
+  test("a null-embedding query gets no neighbors; the rest of its batch is " +
+      "served unchanged") {
+    val nullRow = corpus.filter(col("vec_id") === 4L).select(col("vec_id"),
+      lit(null).cast(corpus.schema("embedding").dataType).as("embedding"))
+    val got = GraphIndex.searchTopK(spark, path, queries.unionByName(nullRow), k = 5)
+    assert(rowSet(got) == rowSet(GraphIndex.searchTopK(spark, path, queries, k = 5)))
+    assert(GraphIndex.searchTopK(spark, path, nullRow, k = 5).count() == 0)
+  }
+
   test("append is exactly-once (in-batch dup + replay), links same-batch " +
       "neighbors, and new vectors become searchable") {
     val p = java.nio.file.Files.createTempDirectory("graph-maint").toString

@@ -1,7 +1,11 @@
 package graft.warehouse
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -52,6 +56,74 @@ class AtomicCommitSpec extends SparkSpec {
     assert(AtomicCommit.snapshot(spark, root, "alpha").get.count() == 2)
     // zero-fresh commits stage no segments but still advance the version
     assert(AtomicCommit.readManifest(spark, root)._1 == 2)
+    // ... and leave no staged directory behind on disk either
+    Seq("alpha", "beta").foreach { t =>
+      assert(!Files.exists(Paths.get(root, t, "seg-2")), s"$t/seg-2 left on disk")
+    }
+  }
+
+  test("a table that fails to stage fails the whole commit: old snapshot kept, " +
+      "no staging job outlives the call, the retry commits both tables") {
+    val root = Files.createTempDirectory("graft-ac").toString
+    AtomicCommit.commitTables(spark, root, tables((1L, "a"), (2L, "b"))) // v1
+    // beta (listed first) throws inside its write job while alpha stages
+    // slowly: the commit may only return once alpha's job has ended too.
+    // The repartition keeps the UDFs in tasks: over a bare local relation
+    // the optimizer would run them while planning, before any job starts.
+    val slow = udf { (v: String) => Thread.sleep(1500); v }
+    val boom = udf { (v: String) =>
+      if (v == "boom") throw new IllegalStateException("staging failed"); v
+    }
+    def frame(id: Long, v: String, f: org.apache.spark.sql.expressions.UserDefinedFunction) =
+      (Seq((id, v)).toDF("id", "v").repartition(1).withColumn("v", f(col("v"))), Seq("id"))
+    val bad = Map("beta" -> frame(30L, "boom", boom), "alpha" -> frame(3L, "c", slow))
+    val e = intercept[Exception](AtomicCommit.commitTables(spark, root, bad))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("staging failed")), e)
+    drain()
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a staging job of the failed commit is still running")
+    assert(AtomicCommit.readManifest(spark, root)._1 == 1, "a failed commit must not publish")
+    assert(rowSet(AtomicCommit.snapshot(spark, root, "alpha").get) == Seq("[1,a]", "[2,b]"))
+    assert(rowSet(AtomicCommit.snapshot(spark, root, "beta").get) == Seq("[10,a]", "[20,b]"))
+
+    // the retry with good input commits both tables at the next version
+    assert(AtomicCommit.commitTables(spark, root, tables((3L, "c"))) ==
+      Map("alpha" -> 1L, "beta" -> 1L))
+    assert(AtomicCommit.readManifest(spark, root)._1 == 2)
+    assert(rowSet(AtomicCommit.snapshot(spark, root, "alpha").get) ==
+      Seq("[1,a]", "[2,b]", "[3,c]"))
+    assert(rowSet(AtomicCommit.snapshot(spark, root, "beta").get) ==
+      Seq("[10,a]", "[20,b]", "[30,c]"))
+  }
+
+  test("every job of a commit carries the caller's local properties") {
+    val root = Files.createTempDirectory("graft-ac").toString
+    val sc = spark.sparkContext
+    val prop = "graft.test.commit"
+    // a first commit without the property: a pool kept across calls would
+    // create its threads here, and they would not see the property below
+    AtomicCommit.commitTables(spark, root, tables((1L, "a")))
+    val seen = new ConcurrentLinkedQueue[Option[String]]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        seen.add(Option(js.properties).flatMap(p => Option(p.getProperty(prop)))); ()
+      }
+    }
+    drain()
+    sc.addSparkListener(l)
+    sc.setLocalProperty(prop, "second")
+    try {
+      // reads the v1 snapshot's keys and writes both tables
+      AtomicCommit.commitTables(spark, root, tables((1L, "a"), (2L, "b")))
+      drain()
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(l)
+    }
+    val props = seen.asScala.toSeq
+    assert(props.nonEmpty)
+    assert(props.forall(_.contains("second")), props)
   }
 
   test("time travel + rollback: every version stays readable; rollback reverts readers, keeps history") {
